@@ -558,8 +558,6 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays two MATERIALIZED pair tables instead of re-running either
     derivation; the oracle re-derives both from scratch, keeping both
     stores hash-checked."""
-    import os as _os
-
     from ..operators import storage as _storage
     from ..session import tracked_persist
     from .dedup import dedup_minhash_lsh, dedup_ngram_jaccard
@@ -570,12 +568,10 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single aggregate below would re-derive each chain per action.
     # (persist on an already-registered frame is a no-op.)
     t = tracked_persist(dedup_ngram_jaccard(spark, sf_dir)).select("d1", "d2")
-    _ppath = _storage.pair_store_path(sf_dir)
-    l = tracked_persist(
-        _storage.read_dedup_pairs(spark, _ppath)
-        if _os.path.isdir(_ppath)
-        else dedup_minhash_lsh(spark, sf_dir)
-    ).select("d1", "d2")
+    l = _storage.PAIRS.read(spark, sf_dir)
+    if l is None:
+        l = dedup_minhash_lsh(spark, sf_dir)
+    l = tracked_persist(l).select("d1", "d2")
     # one full-outer pass references each chain exactly ONCE in the plan
     # (separate count branches would compute the baseline chain twice
     # per action) and yields all three counts in a single aggregate
@@ -1185,8 +1181,6 @@ def lsh_recall_audit_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the sample predicate pushes into the probe side of the
     self-join (one md5 per posting row, no extra pass); baseline cost
     scales with p * corpus, never the corpus squared."""
-    import os as _os
-
     from ..operators import storage as _storage
     from ..session import tracked_persist
     from .dedup import (
@@ -1197,12 +1191,9 @@ def lsh_recall_audit_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = tracked_persist(jaccard_pairs_sampled(spark, sf_dir)).select("d1", "d2")
     # LSH side store-read when built, like the full audit (VERDICT r10 #5)
-    _ppath = _storage.pair_store_path(sf_dir)
-    _lsh = (
-        _storage.read_dedup_pairs(spark, _ppath)
-        if _os.path.isdir(_ppath)
-        else dedup_minhash_lsh(spark, sf_dir)
-    )
+    _lsh = _storage.PAIRS.read(spark, sf_dir)
+    if _lsh is None:
+        _lsh = dedup_minhash_lsh(spark, sf_dir)
     l = tracked_persist(
         _lsh.filter(audit_sample_pred(F.col("d1")))
     ).select("d1", "d2")

@@ -281,15 +281,9 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     store (the labels are a pure function of the pairs) even the
     sequential 8-round propagation is skipped — one parquet read.
     """
-    import os
+    from ..operators.storage import CLUSTERS
 
-    from ..operators import storage
-    from .dedup import dedup_pairs_with_sources
-
-    cpath = storage.cluster_store_path(sf_dir)
-    if os.path.isdir(cpath):
-        return spark.read.parquet(cpath).orderBy(F.col("doc_id").asc())
-    return cluster_labels(dedup_pairs_with_sources(spark, sf_dir).select("d1", "d2"))
+    return CLUSTERS.read_or_derive(spark, sf_dir)
 
 
 _CLUSTER_STATS_SQL = f"""

@@ -133,20 +133,13 @@ def _jaccard_pairs_impl(
     sizes stay corpus-wide (cap semantics don't change under sampling),
     so the result equals the full pair set filtered on d1, at ~p of the
     self-join cost."""
-    import os as _os
-
-    from ..operators import storage as _storage
+    from ..operators.storage import POSTINGS
 
     # persist: referenced by the df-cap pass AND (via sh) sizes + both join
     # sides — without caching the shingle build re-runs 4x. Store-aware:
     # with the materialized postings store this is a columnar read, not
     # the corpus explode + array_distinct pass (same rows by construction)
-    _ppath = _storage.postings_store_path(sf_dir)
-    sh_all = tracked_persist(
-        _storage.read_shingle_postings(spark, _ppath)
-        if _os.path.isdir(_ppath)
-        else _shingle_df(spark, sf_dir)
-    )
+    sh_all = tracked_persist(POSTINGS.read_or_derive(spark, sf_dir))
     # stop-shingle cap: drop hot shingles (df > SHINGLE_DF_CAP) before any
     # size or intersection math — bounds every posting list the self-join
     # sees; the oracle applies the identical cap
@@ -267,16 +260,9 @@ def minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sketch a 100 TB dedup pipeline computes once at ingest and every
     signature consumer (LSH banding, decontamination agreement scans)
     reads back — the corpus-wide min-agg never re-runs per query."""
-    import os
+    from ..operators.storage import SIGNATURES
 
-    from ..operators import storage
-
-    n_hashes, _, _ = minhash_widths(spark, sf_dir)
-    path = storage.signature_store_path(sf_dir, n_hashes)
-    if os.path.isdir(path):
-        return storage.read_minhash_signatures(spark, path, n_hashes)
-    sh = _shingle_df(spark, sf_dir)
-    return sh.groupBy("doc_id").agg(*_minhash_aggs(n_hashes))
+    return SIGNATURES.read_or_derive(spark, sf_dir)
 
 
 def band_frame(sig: DataFrame, bands: int, rows: int) -> DataFrame:
@@ -389,16 +375,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one shingle pass feeds verification and sizes; with a materialized
     # postings store (the stored half of the near-dup index) this is a
     # columnar read instead of the corpus explode + array_distinct pass
-    import os as _os
+    from ..operators.storage import POSTINGS
 
-    from ..operators import storage as _storage
-
-    _ppath = _storage.postings_store_path(sf_dir)
-    sh = tracked_persist(
-        _storage.read_shingle_postings(spark, _ppath)
-        if _os.path.isdir(_ppath)
-        else _shingle_df(spark, sf_dir)
-    )
+    sh = tracked_persist(POSTINGS.read_or_derive(spark, sf_dir))
     # persist: the band fan-out references sig 4x and the bucket self-join
     # doubles that — without caching the signature aggregation re-runs 8x.
     # minhash_signature is store-aware: with a materialized signature
@@ -1043,13 +1022,7 @@ def run_pair_store_stream(
             srcs = srcs.unionByName(
                 spark.read.parquet(prior_src_dir).drop("batch_id")
             )
-        wa = srcs.select(F.col("doc_id").alias("d1"), F.col("source").alias("s1")).join(
-            F.broadcast(pairs), "d1"
-        )
-        wb = srcs.select(F.col("doc_id").alias("d2"), F.col("source").alias("s2")).join(
-            F.broadcast(wa), "d2"
-        )
-        out = wb.select("d1", "d2", "jaccard", "s1", "s2")
+        out = pairs_with_sources(pairs, srcs)
         # pairs FIRST (they must not see this batch's own postings),
         # then this batch's index/source increments — all overwrite-keyed
         # by batch_id so a replay rewrites rather than appends
@@ -1082,35 +1055,33 @@ def run_pair_store_stream(
     )
 
 
+def pairs_with_sources(pairs: DataFrame, sources: DataFrame) -> DataFrame:
+    """(d1, d2, jaccard, s1, s2): both sides' sources resolved from a
+    (doc_id, source) frame. The PAIRS broadcast into the doc->source
+    lookups (never the reverse — documents is the 100 TB side)."""
+    wa = sources.select(
+        F.col("doc_id").alias("d1"), F.col("source").alias("s1")
+    ).join(F.broadcast(pairs), "d1")
+    wb = sources.select(
+        F.col("doc_id").alias("d2"), F.col("source").alias("s2")
+    ).join(F.broadcast(wa), "d2")
+    return wb.select("d1", "d2", "jaccard", "s1", "s2")
+
+
 def dedup_pairs_with_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verified near-dup pairs with both sides' sources resolved:
     (d1, d2, jaccard, s1, s2).
 
     Reads the MATERIALIZED pair store when one exists for this corpus
-    (operators/storage.py build_dedup_pair_store — the 100 TB shape: the
-    dedup job writes its pair table once, every audit/clustering/survivor
-    consumer reads parquet instead of re-deriving the LSH chain); falls
-    back to in-query derivation otherwise, so correctness never depends
-    on a store being present. The store is fingerprint-keyed to the
-    source data + sketch params, so it can't serve stale pairs. In the
-    derived path the PAIRS broadcast into the doc->source lookups (never
-    the reverse — documents is the 100 TB side)."""
-    import os
+    (operators/storage.py ``PAIRS`` — the 100 TB shape: the dedup job
+    writes its pair table once, every audit/clustering/survivor consumer
+    reads parquet instead of re-deriving the LSH chain); falls back to
+    in-query derivation otherwise, so correctness never depends on a
+    store being present. The store is fingerprint-keyed to the source
+    data + sketch params, so it can't serve stale pairs."""
+    from ..operators.storage import PAIRS
 
-    from ..operators import storage
-
-    path = storage.pair_store_path(sf_dir)
-    if os.path.isdir(path):
-        return storage.read_dedup_pairs(spark, path)
-    pairs = dedup_minhash_lsh(spark, sf_dir)
-    docs = _t(spark, sf_dir)["documents"].select("doc_id", "source")
-    wa = docs.select(F.col("doc_id").alias("d1"), F.col("source").alias("s1")).join(
-        F.broadcast(pairs), "d1"
-    )
-    wb = docs.select(F.col("doc_id").alias("d2"), F.col("source").alias("s2")).join(
-        F.broadcast(wa), "d2"
-    )
-    return wb.select("d1", "d2", "jaccard", "s1", "s2")
+    return PAIRS.read_or_derive(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------

@@ -480,15 +480,12 @@ def ann_ivfpq_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~64x narrower table. Query vectors (vec_id < BATCH_Q) are excluded
     from results corpus-side. Determinism: same fold/argmin/tie-break
     contracts as ann_ivfpq_topk, replayed per ladder rung in the oracle."""
-    import os
-
     from pyspark.sql import Window
 
     from ..operators import storage
     from .clustering import IVFPQ_CAND, NPROBE, kmeans_fit
-    from .similarity import pq_codes_frame
 
-    asg, cents = kmeans_fit(spark, sf_dir)
+    _asg, cents = kmeans_fit(spark, sf_dir)
     emb = _t(spark, sf_dir)["embeddings"]
     seeds = pq_seed_vectors(spark, sf_dir)
     q_vecs = seeds[:BATCH_Q]  # vec 0..B-1 double as the query batch
@@ -506,11 +503,7 @@ def ann_ivfpq_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         for q in range(BATCH_Q)
     }
     cells = sorted({c for cs in sel.values() for c in cs})
-    path = storage.ivfpq_code_store_path(sf_dir, len(cents))
-    if os.path.isdir(path):
-        codes = storage.read_ivfpq_codes(spark, path)
-    else:
-        codes = pq_codes_frame(spark, sf_dir).join(asg, "vec_id")
+    codes = storage.IVFPQ_CODES.read_or_derive(spark, sf_dir, k=len(cents))
     probed = codes.where(
         F.col("cid").isin(cells) & (F.col("vec_id") >= BATCH_Q)
     )

@@ -58,6 +58,10 @@ def run(sf_dir: str, out_path: str, only: list[str] | None = None) -> dict[str, 
     )
     from tests.oracle_harness import compare, duck_con
 
+    unknown = sorted(set(only or ()) - set(QUERIES))
+    if unknown:
+        # a typo must not turn into a silently smaller sweep that exits 0
+        raise SystemExit(f"unknown query names in --only: {', '.join(unknown)}")
     spark = (
         SparkSession.builder.master(
             f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]"
@@ -76,7 +80,7 @@ def run(sf_dir: str, out_path: str, only: list[str] | None = None) -> dict[str, 
     con = duck_con(sf_dir)
     records: dict[str, dict] = {}
     t_start = time.perf_counter()
-    names = sorted(QUERIES) if only is None else [n for n in only if n in QUERIES]
+    names = sorted(QUERIES) if only is None else only
     for i, name in enumerate(names, 1):
         rec = {
             "rows_match": False,

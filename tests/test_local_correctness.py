@@ -117,3 +117,29 @@ def test_rotation_keeps_driver_evidence_fresh():
         f"driver evidence would age past {MAX_EVIDENCE_AGE} rounds for "
         f"queries outside the driver head: {overdue}"
     )
+
+
+def test_only_rejects_unknown_query_names(tmp_path):
+    """``--only`` with a name that is not registered exits non-zero and
+    names it, before any Spark work, instead of sweeping the rest and
+    reporting success."""
+    import subprocess
+    import sys
+
+    out = tmp_path / "lc.json"
+    proc = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(ROOT, "local_correctness.py"),
+            "--only",
+            "dedup_clusters,no_such_query",
+            "--out",
+            str(out),
+        ],
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode != 0
+    assert "unknown query names in --only: no_such_query" in proc.stderr
+    assert not out.exists()

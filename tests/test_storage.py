@@ -425,3 +425,122 @@ def test_zorder_string_surrogate_is_order_preserving_for_ascii(spark):
     # distinct within 6 chars -> distinct ranks
     assert got["user000001"] == got["user000002"]  # differ past char 6
     assert got["a"] != got["b"] and got["aa"] != got["a"]
+
+
+# ---------------------------------------------------------------------------
+# the declared Store contract: one implementation owns exists-check, tmp
+# naming, writes, atomic publish, reads and read-or-derive for every store
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture()
+def toy_store(tmp_path, monkeypatch):
+    """A two-variant Store over a tiny live derivation, rooted in tmp."""
+    root = tmp_path / "stores"
+    monkeypatch.setenv("SPARK_GRAFT_STORE_DIR", str(root))
+    calls = []
+
+    def derive(spark, sf_dir, n):
+        calls.append(n)
+        return spark.range(n).selectExpr(
+            "id", "IF(id % 2 = 0, 'even', 'odd') AS variant"
+        )
+
+    store = storage.Store(
+        "toy",
+        derive,
+        params=lambda n: (f"n{n}",),
+        layout=storage.Layout(repartition=("variant",), partition_by=("variant",)),
+        view=lambda df, **_: df.select("id"),
+        part="variant",
+    )
+    return store, str(root), calls
+
+
+def _ids(df):
+    return sorted(r["id"] for r in df.collect())
+
+
+def test_store_read_or_derive_without_store_is_live(spark, toy_store):
+    store, root, calls = toy_store
+    assert store.read(spark, None, n=4) is None
+    assert _ids(store.read_or_derive(spark, None, n=4)) == [0, 1, 2, 3]
+    assert calls == [4]
+    assert not os.path.exists(root), "read_or_derive must never write"
+
+
+def test_store_build_publishes_once(spark, toy_store):
+    store, root, calls = toy_store
+    path = store.build(spark, None, n=4)
+    assert path == os.path.join(root, "toy-v1-n4") and os.path.isdir(path)
+    stamp = os.path.getmtime(path)
+    assert store.build(spark, None, n=4) == path
+    assert calls == [4], "second build re-ran the derivation"
+    assert os.path.getmtime(path) == stamp
+    assert os.listdir(root) == ["toy-v1-n4"], "stranded tmp build dirs"
+    # with the store present, read_or_derive reads it
+    assert _ids(store.read_or_derive(spark, None, n=4)) == [0, 1, 2, 3]
+    assert calls == [4]
+
+
+def test_store_lost_publish_race_discards_tmp(spark, toy_store):
+    store, root, _ = toy_store
+    path = store.path(n=3)
+
+    def produce():
+        # a concurrent builder publishes while this one is deriving
+        os.makedirs(path)
+        with open(os.path.join(path, "winner"), "w") as f:
+            f.write("winner")
+        return spark.range(3).selectExpr("id", "'even' AS variant")
+
+    assert store.publish(path, produce) == path
+    assert os.listdir(path) == ["winner"]
+    assert not [d for d in os.listdir(root) if ".build-" in d]
+
+
+def test_store_missing_variant_reads_none_not_empty(spark, toy_store):
+    import shutil
+
+    store, _, _ = toy_store
+    path = store.build(spark, None, n=4)
+    assert _ids(store.read(spark, None, part="even", n=4)) == [0, 2]
+    assert store.read(spark, None, part="absent", n=4) is None
+    shutil.rmtree(os.path.join(path, "variant=odd"))
+    assert store.read(spark, None, part="odd", n=4) is None
+
+
+def test_store_directory_names_are_pinned(monkeypatch):
+    """Every declared store's directory name for a fixed fingerprint.
+    Stores already built under earlier releases keep being found only
+    while these names stay byte-identical."""
+    monkeypatch.setenv("SPARK_GRAFT_STORE_DIR", "/stores")
+    monkeypatch.setattr(storage, "_sf_fingerprint", lambda sf_dir, tables: "f" * 12)
+    s = storage
+    pinned = {
+        s.PAIRS.path("sf"): "pairs-v1-wauto-j0.5-ffffffffffff",
+        s.SIGNATURES.path("sf", n_hashes=8): "minhash-sig-v1-h8-ffffffffffff",
+        s.POSTINGS.path("sf"): "shingle-postings-v1-ffffffffffff",
+        s.CLUSTERS.path("sf"): "pairs-v1-wauto-j0.5-ffffffffffff-clusters",
+        s.KMEANS.path("sf", k=4, iters=2): "kmeans-v1-k4i2-ffffffffffff",
+        s.SHARDED_IVF.path("sf"): "sharded-ivf-v1-ffffffffffff",
+        s.ADAPTIVE_IVF.path("sf", k1=4): "adaptive-ivf-v1-k4-h125-ffffffffffff",
+        s.ADAPTIVE_IVFPQ_CODES.path(
+            "sf", k1=4
+        ): "adaptive-ivfpq-codes-v1-k4-h125-s8k8-ffffffffffff",
+        s.PQ_CODES.path("sf"): "pq-codes-v1-s8k8-ffffffffffff",
+        s.PQ_CODEBOOK.path("sf"): "pq-codebook-v1-s8k8i2-ffffffffffff",
+        s.IVFPQ_CODES.path("sf", k=4): "ivfpq-codes-v1-k4s8k8-ffffffffffff",
+        s.RHP_BANDS.path("sf", bits=4): "rhp-bands-v1-L8k4-ffffffffffff",
+        s.EMBEDDING_PAIRS.path("sf"): "emb-pairs-v1p-ffffffffffff",
+        s.NGRAM_PAIRS.path("sf"): "ngram-pairs-v1-t50-cap100-ffffffffffff",
+        s.CMASS_SEM_PAIRS.path(): "cmass-sem-pairs-v1-n2048-c8-t90",
+        s.CMASS_SEM_PAIRS.path(
+            n=16384, probe=128
+        ): "cmass-sem-pairs-v1-n16384-c8-t90-p128",
+        s.CMASS_FIT.path(): "cmass-fit-v1l2-n2048-c8-h125",
+        s.CMASS_FIT.path(n=16384): "cmass-fit-v1l2-n16384-c8-h125",
+        s.CF_FIT.path(): "cf-fit-v1l3-n2048-c8",
+    }
+    for path, name in pinned.items():
+        assert path == os.path.join("/stores", name)
